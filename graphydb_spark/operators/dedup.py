@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .graph_algos import _directed, _min_label
 from .text import hash60, spread_small_scan as _spread_small_scan, tokens
 
 
@@ -153,30 +154,18 @@ def dedup_clusters(pairs: DataFrame, id_a: str = "id_a",
     when A-C was never a candidate pair.  Min-label propagation on int64
     ids: the pair list is materialized once, partitioned on the join key,
     and every iteration shuffles only the (node, label) frame.  Converges
-    in O(cluster diameter) rounds — near-dup clusters are shallow.
+    in O(cluster diameter) rounds — near-dup clusters are shallow; warns
+    when ``max_iter`` rounds end before the fixpoint.
     """
-    sym = (pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-           .unionByName(pairs.select(F.col(id_b).alias("src"),
-                                     F.col(id_a).alias("dst")))
-           .distinct()
-           .repartition("dst")
+    edges = pairs.select(F.col(id_a).alias("startuid"),
+                         F.col(id_b).alias("enduid"))
+    sym = (_directed(edges, "both").distinct().repartition("dst")
            .localCheckpoint(eager=True))
-    labels = (sym.select(F.col("src").alias("id"))
-              .distinct()
-              .select("id", F.col("id").alias("cluster")))
-    for _ in range(max_iter):
-        nbr = (sym.join(labels.withColumnRenamed("id", "dst"), "dst")
-               .select(F.col("src").alias("id"), "cluster"))
-        new = (labels.unionByName(nbr)
-               .groupBy("id").agg(F.min("cluster").alias("cluster"))
-               .localCheckpoint(eager=True))
-        changed = (new.alias("n").join(labels.alias("o"), "id")
-                   .where(F.col("n.cluster") != F.col("o.cluster"))
-                   .limit(1).count())
-        labels = new
-        if changed == 0:
-            break
-    return labels.select(F.col("id").alias("doc_id"), "cluster")
+    labels = (sym.select(F.col("src").alias("uid")).distinct()
+              .select("uid", F.col("uid").alias("label")))
+    return (_min_label(sym, labels, max_iter, "dedup_clusters")
+            .select(F.col("uid").alias("doc_id"),
+                    F.col("label").alias("cluster")))
 
 
 def resolve_duplicates(df: DataFrame, clusters: DataFrame, score_col,
@@ -198,8 +187,7 @@ def resolve_duplicates(df: DataFrame, clusters: DataFrame, score_col,
     """
     s = F.col(score_col) if isinstance(score_col, str) else score_col
     scored = clusters.join(
-        df.select(F.col(id_col),
-                  s.cast("long").alias("_s")), id_col)
+        df.select(F.col(id_col), s.alias("_s")), id_col)
     best = F.max(F.struct(F.col("_s").alias("s"),
                           (-F.col(id_col)).alias("negid")))
     return (scored.groupBy(cluster_col)

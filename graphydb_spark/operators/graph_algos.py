@@ -6,6 +6,22 @@ degrees, connected components, PageRank, k-hop frontier expansion — all
 iterative DataFrame joins with lineage control (localCheckpoint every
 iteration), since GraphX is JVM-only and unavailable from PySpark.
 
+Supersteps shared by several algorithms are written once:
+
+* :func:`_directed` turns ``(startuid, enduid)`` edges into ``(src,
+  dst)`` steps for ``"out"``, ``"in"`` or ``"both"``.
+* :func:`_bfs_layers` is the frontier loop (visited anti-join,
+  checkpoint, stop at the first empty frontier, ``dist`` per layer)
+  behind :func:`bfs_distances`, :func:`k_hop` and
+  :func:`closeness_centrality`; extra key columns (``source``) expand
+  many sources in the same rounds as one.
+* :func:`_min_label` is the min-label propagation behind
+  :func:`connected_components` and ``dedup.dedup_clusters``.  Each
+  vertex's previous label rides through the superstep's union + ``min``
+  aggregation, so the convergence test is a filter + ``limit(1)`` count
+  over the checkpointed frame, not a second new-vs-old join; hitting
+  ``max_iter`` before the fixpoint warns.
+
 Scale notes: every iteration is one shuffle on uid; pre-partitioning the
 edge list by ``startuid`` (``repartition(n, 'startuid')``) lets AQE reuse
 the exchange across iterations.  Components/PageRank converge in
@@ -15,6 +31,7 @@ O(diameter) / O(iters) rounds.
 from __future__ import annotations
 
 import math
+import warnings
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -154,6 +171,84 @@ def _degrees_by_kind(edges_df: DataFrame, direction: str, node_kind: str,
     return agg.select(uid.alias("uid"), "degree")
 
 
+def _directed(edges_df: DataFrame, direction: str) -> DataFrame:
+    """``(src, dst)`` steps over ``(startuid, enduid)`` edges: ``"out"``
+    follows each edge, ``"in"`` reverses it, anything else (``"both"``)
+    takes both."""
+    fwd = edges_df.select(F.col("startuid").alias("src"),
+                          F.col("enduid").alias("dst"))
+    rev = edges_df.select(F.col("enduid").alias("src"),
+                          F.col("startuid").alias("dst"))
+    if direction == "out":
+        return fwd
+    if direction == "in":
+        return rev
+    return fwd.unionByName(rev)
+
+
+def _min_label(sym: DataFrame, labels: DataFrame, max_iter: int,
+               caller: str) -> DataFrame:
+    """Min-label propagation: ``labels`` ``(uid, label)`` spread over the
+    symmetric step frame ``sym`` ``(src, dst)`` (partitioned on ``dst``)
+    until every vertex holds the minimum label of its component.
+
+    A superstep is one join + one ``min`` aggregation over the union of
+    the old labels and the neighbours' labels.  The old label rides the
+    same aggregation as ``prev``, so "did anything change" is a filter +
+    ``limit(1)`` count over the checkpointed result.  A vertex reached
+    for the first time (an edge endpoint with no initial label) has no
+    ``prev`` and counts as changed.  Stopping at ``max_iter`` before the
+    fixpoint splits components, so it warns.
+    """
+    no_prev = F.lit(None).cast(labels.schema["label"].dataType)
+    for _ in range(max_iter):
+        nbr = (sym.join(labels.withColumnRenamed("uid", "dst"), "dst")
+               .select(F.col("src").alias("uid"), "label",
+                       no_prev.alias("prev")))
+        new = (labels.withColumn("prev", F.col("label")).unionByName(nbr)
+               .groupBy("uid").agg(F.min("label").alias("label"),
+                                   F.min("prev").alias("prev"))
+               .localCheckpoint(eager=True))
+        labels = new.drop("prev")
+        changed = new.where(F.col("prev").isNull()
+                            | (F.col("label") != F.col("prev")))
+        if changed.limit(1).count() == 0:
+            return labels
+    warnings.warn(
+        f"{caller}: min-label propagation did not converge in {max_iter} "
+        "rounds; components may be split. Raise max_iter.",
+        RuntimeWarning, stacklevel=3)
+    return labels
+
+
+def _bfs_layers(step: DataFrame, seeds: DataFrame, max_depth: int,
+                keys: tuple[str, ...] = ()) -> DataFrame:
+    """Frontier expansion from ``seeds`` ``(*keys, uid)`` over ``step``
+    ``(src, dst)`` → ``(*keys, uid, dist)``, the minimum hop count per
+    key up to ``max_depth``.
+
+    Each round joins only the new frontier and anti-joins it against
+    the visited set, so the first visit IS the distance (no
+    min-aggregation over paths); the loop stops at the first empty
+    frontier.  Key columns (e.g. ``source``) ride the join and
+    anti-join keys, so k sources expand in the same rounds as one.
+    """
+    on = [*keys, "uid"]
+    visited = seeds.withColumn("dist", F.lit(0))
+    frontier = seeds
+    for d in range(1, max_depth + 1):
+        nxt = (step.join(frontier.withColumnRenamed("uid", "src"), "src")
+               .select(*keys, F.col("dst").alias("uid")).distinct()
+               .join(visited.select(on), on, "left_anti")
+               .localCheckpoint(eager=True))
+        if nxt.limit(1).count() == 0:
+            break
+        visited = (visited.unionByName(nxt.withColumn("dist", F.lit(d)))
+                   .localCheckpoint(eager=True))
+        frontier = nxt
+    return visited
+
+
 def connected_components(nodes_df: DataFrame, edges_df: DataFrame,
                          max_iter: int = 20) -> DataFrame:
     """(uid, component) where component = min uid string in the component.
@@ -161,33 +256,16 @@ def connected_components(nodes_df: DataFrame, edges_df: DataFrame,
     Label propagation over the undirected edge set; each round is one
     join + one min-aggregation.  Converges in graph-diameter rounds;
     ``localCheckpoint`` caps lineage so 50-round runs stay planful.
+    Warns when ``max_iter`` rounds end before the fixpoint.
     """
     # symmetrized edge list materialized once, partitioned on the join
     # key (dst) — iterations then only shuffle the label frame (see the
     # same pattern in pagerank)
-    sym = (edges_df.select(F.col("startuid").alias("src"),
-                           F.col("enduid").alias("dst"))
-           .unionByName(edges_df.select(F.col("enduid").alias("src"),
-                                        F.col("startuid").alias("dst")))
-           .distinct()
-           .repartition("dst")
+    sym = (_directed(edges_df, "both").distinct().repartition("dst")
            .localCheckpoint(eager=True))
-    labels = nodes_df.select(F.col("uid"), F.col("uid").alias("component"))
-    for _ in range(max_iter):
-        # neighbor labels + own label, take the min per node
-        nbr = (sym.join(labels.withColumnRenamed("uid", "dst"), "dst")
-                  .select(F.col("src").alias("uid"), "component"))
-        new = (labels.unionByName(nbr)
-                     .groupBy("uid").agg(F.min("component").alias("component"))
-                     .localCheckpoint(eager=True))
-        changed = (new.alias("n")
-                   .join(labels.alias("o"), "uid")
-                   .where(F.col("n.component") != F.col("o.component"))
-                   .limit(1).count())
-        labels = new
-        if changed == 0:
-            break
-    return labels
+    labels = nodes_df.select("uid", F.col("uid").alias("label"))
+    return (_min_label(sym, labels, max_iter, "connected_components")
+            .withColumnRenamed("label", "component"))
 
 
 def pagerank(nodes_df: DataFrame, edges_df: DataFrame, iters: int = 10,
@@ -263,29 +341,7 @@ def k_hop(edges_df: DataFrame, seed_uids_df: DataFrame, k: int,
           direction: str = "out") -> DataFrame:
     """All uids within k hops of the seed set (frontier expansion with a
     visited anti-join — each hop shuffles only the frontier)."""
-    if direction == "out":
-        step = edges_df.select(F.col("startuid").alias("src"),
-                               F.col("enduid").alias("dst"))
-    elif direction == "in":
-        step = edges_df.select(F.col("enduid").alias("src"),
-                               F.col("startuid").alias("dst"))
-    else:
-        step = (edges_df.select(F.col("startuid").alias("src"),
-                                F.col("enduid").alias("dst"))
-                .unionByName(edges_df.select(F.col("enduid").alias("src"),
-                                             F.col("startuid").alias("dst"))))
-    visited = seed_uids_df.select(F.col("uid")).distinct()
-    frontier = visited
-    for _ in range(k):
-        nxt = (step.join(frontier.withColumnRenamed("uid", "src"), "src")
-                   .select(F.col("dst").alias("uid")).distinct()
-                   .join(visited, "uid", "left_anti")
-                   .localCheckpoint(eager=True))
-        if nxt.limit(1).count() == 0:
-            break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    return visited
+    return bfs_distances(edges_df, seed_uids_df, k, direction).select("uid")
 
 
 def triangle_count(edges_df: DataFrame,
@@ -377,33 +433,10 @@ def bfs_distances(edges_df: DataFrame, seed_uids_df: DataFrame,
     because BFS discovers every node at its minimum depth, the first
     visit IS the distance — no min-aggregation over paths.
     """
-    if direction == "out":
-        step = edges_df.select(F.col("startuid").alias("src"),
-                               F.col("enduid").alias("dst"))
-    elif direction == "in":
-        step = edges_df.select(F.col("enduid").alias("src"),
-                               F.col("startuid").alias("dst"))
-    else:
-        step = (edges_df.select(F.col("startuid").alias("src"),
-                                F.col("enduid").alias("dst"))
-                .unionByName(edges_df.select(F.col("enduid").alias("src"),
-                                             F.col("startuid").alias("dst"))))
-    step = step.repartition("src").localCheckpoint(eager=True)
-    visited = (seed_uids_df.select("uid").distinct()
-               .withColumn("dist", F.lit(0)))
-    frontier = visited.select("uid")
-    for d in range(1, max_depth + 1):
-        nxt = (step.join(frontier.withColumnRenamed("uid", "src"), "src")
-                   .select(F.col("dst").alias("uid")).distinct()
-                   .join(visited.select("uid"), "uid", "left_anti")
-                   .localCheckpoint(eager=True))
-        if nxt.limit(1).count() == 0:
-            break
-        visited = (visited
-                   .unionByName(nxt.withColumn("dist", F.lit(d)))
-                   .localCheckpoint(eager=True))
-        frontier = nxt
-    return visited
+    step = (_directed(edges_df, direction).repartition("src")
+            .localCheckpoint(eager=True))
+    return _bfs_layers(step, seed_uids_df.select("uid").distinct(),
+                       max_depth)
 
 
 def sssp(weighted_edges_df: DataFrame, seed_uids_df: DataFrame,
@@ -463,12 +496,7 @@ def label_propagation(nodes_df: DataFrame, edges_df: DataFrame,
     """
     from pyspark.sql import Window as W
 
-    sym = (edges_df.select(F.col("startuid").alias("src"),
-                           F.col("enduid").alias("dst"))
-           .unionByName(edges_df.select(F.col("enduid").alias("src"),
-                                        F.col("startuid").alias("dst")))
-           .distinct()
-           .repartition("src")
+    sym = (_directed(edges_df, "both").distinct().repartition("src")
            .localCheckpoint(eager=True))
     labels = nodes_df.select("uid", F.col("uid").alias("label"))
     w = W.partitionBy("uid").orderBy(F.col("n").desc(), F.col("label"))
@@ -502,34 +530,30 @@ def k_core(nodes_df: DataFrame, edges_df: DataFrame, k: int,
     neighbor (degree = distinct neighbors, the standard k-core
     definition).
     """
-    sym = (edges_df.select(F.col("startuid").alias("a"),
-                           F.col("enduid").alias("b"))
-           .unionByName(edges_df.select(F.col("enduid").alias("a"),
-                                        F.col("startuid").alias("b")))
-           .where(F.col("a") != F.col("b"))
-           .distinct()
-           .localCheckpoint(eager=True))
-    converged = False
+    sym = (_directed(edges_df, "both").where(F.col("src") != F.col("dst"))
+           .distinct().localCheckpoint(eager=True))
+    n = sym.count()
     for _ in range(max_iter):
-        deg = sym.groupBy("a").agg(F.count("*").alias("d"))
-        keep = deg.where(F.col("d") >= k).select(F.col("a").alias("uid"))
-        nxt = (sym.join(keep.withColumnRenamed("uid", "a"), "a", "left_semi")
-               .join(keep.select(F.col("uid").alias("b")), "b", "left_semi")
+        deg = sym.groupBy("src").agg(F.count("*").alias("d"))
+        keep = deg.where(F.col("d") >= k).select(F.col("src").alias("uid"))
+        nxt = (sym.join(keep.withColumnRenamed("uid", "src"), "src",
+                        "left_semi")
+               .join(keep.withColumnRenamed("uid", "dst"), "dst",
+                     "left_semi")
                .localCheckpoint(eager=True))
-        converged = nxt.count() == sym.count()
+        prev_n, n = n, nxt.count()       # reuse last round's count
         sym = nxt
-        if converged:
+        if n == prev_n:
             break
-    if not converged:
+    else:
         # peel depth can exceed max_iter (e.g. a pendant chain peels a
         # couple of nodes per round); returning silently would hand back
         # a superset of the true k-core
-        import warnings
         warnings.warn(
             f"k_core: peel loop did not reach a fixpoint in {max_iter} "
             "rounds; result is a superset of the true k-core. "
             "Raise max_iter.", RuntimeWarning, stacklevel=2)
-    return (sym.select(F.col("a").alias("uid")).distinct()
+    return (sym.select(F.col("src").alias("uid")).distinct()
             .join(nodes_df.select("uid"), "uid", "left_semi"))
 
 
@@ -685,18 +709,8 @@ def bfs_paths(edges_df: DataFrame, seed_uids_df: DataFrame,
     length (bounded by max_depth — at 100 TB keep max_depth small or
     carry only the predecessor and reconstruct on demand).
     """
-    if direction == "out":
-        step = edges_df.select(F.col("startuid").alias("src"),
-                               F.col("enduid").alias("dst"))
-    elif direction == "in":
-        step = edges_df.select(F.col("enduid").alias("src"),
-                               F.col("startuid").alias("dst"))
-    else:
-        step = (edges_df.select(F.col("startuid").alias("src"),
-                                F.col("enduid").alias("dst"))
-                .unionByName(edges_df.select(F.col("enduid").alias("src"),
-                                             F.col("startuid").alias("dst"))))
-    step = step.repartition("src").localCheckpoint(eager=True)
+    step = (_directed(edges_df, direction).repartition("src")
+            .localCheckpoint(eager=True))
     visited = (seed_uids_df.select("uid").distinct()
                .withColumn("dist", F.lit(0))
                .withColumn("path", F.array(F.col("uid"))))
@@ -829,7 +843,6 @@ def dag_layers(edges_df: DataFrame, max_iter: int = 32) -> DataFrame:
         if fp == prev_fp:
             return layers
         prev_fp = fp
-    import warnings
     warnings.warn(f"dag_layers did not converge in {max_iter} rounds — "
                   "the graph likely contains a cycle; returning the "
                   "partial layering", RuntimeWarning, stacklevel=2)
@@ -942,7 +955,6 @@ def strongly_connected_components(edges_df: DataFrame,
         remaining = (remaining.join(found.select("uid"), "uid",
                                     "left_anti")
                      .localCheckpoint(eager=True))
-    import warnings
     warnings.warn(f"scc did not finish in {max_outer} outer rounds; "
                   "returning the partial assignment", RuntimeWarning,
                   stacklevel=2)
@@ -1052,7 +1064,6 @@ def k_truss(edges_df: DataFrame, k: int, max_iter: int = 30) -> DataFrame:
         if converged:
             break
     if not converged:
-        import warnings
         warnings.warn(
             f"k_truss: peel loop did not reach a fixpoint in "
             f"{max_iter} rounds; result is a superset. Raise max_iter.",
@@ -1085,34 +1096,11 @@ def closeness_centrality(edges_df: DataFrame, sources_df: DataFrame,
     once and checkpointed, so each expansion is a single co-located
     join at scale.
     """
-    if direction == "out":
-        step = edges_df.select(F.col("startuid").alias("src"),
-                               F.col("enduid").alias("dst"))
-    elif direction == "in":
-        step = edges_df.select(F.col("enduid").alias("src"),
-                               F.col("startuid").alias("dst"))
-    else:
-        step = (edges_df.select(F.col("startuid").alias("src"),
-                                F.col("enduid").alias("dst"))
-                .unionByName(edges_df.select(
-                    F.col("enduid").alias("src"),
-                    F.col("startuid").alias("dst"))))
-    step = step.distinct().repartition("src").localCheckpoint(eager=True)
-    visited = (sources_df.select(F.col("uid").alias("source")).distinct()
-               .select("source", F.col("source").alias("uid"),
-                       F.lit(0).alias("dist")))
-    frontier = visited.select("source", "uid")
-    for d in range(1, max_depth + 1):
-        nxt = (step.join(frontier.withColumnRenamed("uid", "src"), "src")
-               .select("source", F.col("dst").alias("uid")).distinct()
-               .join(visited.select("source", "uid"),
-                     ["source", "uid"], "left_anti")
-               .localCheckpoint(eager=True))
-        if nxt.limit(1).count() == 0:
-            break
-        visited = (visited.unionByName(
-            nxt.withColumn("dist", F.lit(d))).localCheckpoint(eager=True))
-        frontier = nxt
+    step = (_directed(edges_df, direction).distinct().repartition("src")
+            .localCheckpoint(eager=True))
+    seeds = (sources_df.select(F.col("uid").alias("source")).distinct()
+             .select("source", F.col("source").alias("uid")))
+    visited = _bfs_layers(step, seeds, max_depth, keys=("source",))
     lcm = 1
     for d in range(2, max_depth + 1):
         lcm = lcm * d // math.gcd(lcm, d)
@@ -1228,19 +1216,8 @@ def betweenness_sampled(edges_df: DataFrame, sources_df: DataFrame,
     Rounds: max_depth forward + max_depth backward, each a keyed
     join + aggregation over frontier/layer-sized frames only.
     """
-    if direction == "out":
-        step = edges_df.select(F.col("startuid").alias("src"),
-                               F.col("enduid").alias("dst"))
-    elif direction == "in":
-        step = edges_df.select(F.col("enduid").alias("src"),
-                               F.col("startuid").alias("dst"))
-    else:
-        step = (edges_df.select(F.col("startuid").alias("src"),
-                                F.col("enduid").alias("dst"))
-                .unionByName(edges_df.select(
-                    F.col("enduid").alias("src"),
-                    F.col("startuid").alias("dst"))))
-    step = step.distinct().repartition("src").localCheckpoint(eager=True)
+    step = (_directed(edges_df, direction).distinct().repartition("src")
+            .localCheckpoint(eager=True))
     cur = (sources_df.select(F.col("uid").alias("source")).distinct()
            .select("source", F.col("source").alias("uid"),
                    F.lit(0).alias("dist"),
@@ -1303,8 +1280,10 @@ def betweenness_sampled(edges_df: DataFrame, sources_df: DataFrame,
                                         F.lit(0).cast("decimal(28,9)"))
                              .alias("delta"))
                      .localCheckpoint(eager=True))
-    contrib = deltas[1] if 1 in deltas else None
-    for d in range(2, maxd + 1):
+    # sources' own dependencies do not count; with no layer past the
+    # sources the result is the empty (uid, betweenness) frame
+    contrib = deltas[0].limit(0)
+    for d in range(1, maxd + 1):
         contrib = contrib.unionByName(deltas[d])
     return (contrib.groupBy("uid")
             .agg(F.sum("delta").cast("decimal(38,9)").alias("_b"))
@@ -1420,7 +1399,7 @@ def maximal_independent_set(edges_df: DataFrame, rounds: int = 6,
     alive_nodes = (sym.select(F.col("u").alias("uid")).distinct()
                    .localCheckpoint(eager=True))
     alive_edges = sym
-    selected = None
+    selected = alive_nodes.limit(0)
     for _ in range(rounds):
         if alive_nodes.limit(1).count() == 0:
             break
@@ -1435,8 +1414,7 @@ def maximal_independent_set(edges_df: DataFrame, rounds: int = 6,
                                    F.col("uid").alias("id"))
                           < F.col("nm")))
                 .select("uid").localCheckpoint(eager=True))
-        selected = cand if selected is None \
-            else selected.unionByName(cand)
+        selected = selected.unionByName(cand)
         removed = (cand.unionByName(
             alive_edges.join(cand.withColumnRenamed("uid", "u"), "u")
             .select(F.col("v").alias("uid"))).distinct()
@@ -1450,7 +1428,6 @@ def maximal_independent_set(edges_df: DataFrame, rounds: int = 6,
                              "v", "left_semi")
                        .localCheckpoint(eager=True))
     if alive_nodes.limit(1).count() > 0:
-        import warnings
         warnings.warn(
             f"maximal_independent_set: not converged in {rounds} rounds; "
             "result is independent but may not be maximal.",
@@ -1491,7 +1468,7 @@ def maximal_matching(edges_df: DataFrame, rounds: int = 6,
             .cast("long")
 
     alive = und.withColumn("p", pri()).localCheckpoint(eager=True)
-    matched = None
+    matched = und.limit(0)
     for _ in range(rounds):
         if alive.limit(1).count() == 0:
             break
@@ -1516,7 +1493,7 @@ def maximal_matching(edges_df: DataFrame, rounds: int = 6,
                 .agg(F.min(F.col("wins").cast("int")).alias("all_win"))
                 .where(F.col("all_win") == 1)
                 .select("u", "v").localCheckpoint(eager=True))
-        matched = cand if matched is None else matched.unionByName(cand)
+        matched = matched.unionByName(cand)
         used = (cand.select(F.col("u").alias("n"))
                 .unionByName(cand.select(F.col("v").alias("n")))
                 .distinct().localCheckpoint(eager=True))
@@ -1528,7 +1505,6 @@ def maximal_matching(edges_df: DataFrame, rounds: int = 6,
                  .select("u", "v", "p")
                  .localCheckpoint(eager=True))
     if alive.limit(1).count() > 0:
-        import warnings
         warnings.warn(
             f"maximal_matching: not converged in {rounds} rounds; "
             "matching is valid but may not be maximal.",

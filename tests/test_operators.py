@@ -262,6 +262,68 @@ def test_connected_components(spark):
     assert cc["f"] == "f"
 
 
+def test_connected_components_endpoint_missing_from_nodes(spark):
+    """An edge endpoint absent from nodes_df gets its first label in the
+    first superstep; that counts as a change, so the next superstep
+    still carries its label on to its other neighbours."""
+    nodes = spark.createDataFrame([("a",), ("c",)], "uid string")
+    edges = spark.createDataFrame([("a", "x"), ("x", "c")],
+                                  "startuid string, enduid string")
+    cc = {r["uid"]: r["component"] for r in
+          graph_algos.connected_components(nodes, edges).collect()}
+    assert cc == {"a": "a", "c": "a", "x": "a"}
+
+
+def _path_components(spark, algo):
+    """A 30-node path with its minimum label at one end: min-label
+    propagation needs 29 supersteps to cross it plus one that changes
+    nothing.  Returns ``run(**kw)`` for either min-label entry point."""
+    n = 30
+    if algo == "connected_components":
+        uids = [f"n{i:02d}" for i in range(n)]
+        nodes = spark.createDataFrame([(u,) for u in uids], "uid string")
+        edges = spark.createDataFrame(list(zip(uids, uids[1:])),
+                                      "startuid string, enduid string")
+        return lambda **kw: graph_algos.connected_components(nodes, edges,
+                                                             **kw)
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(n - 1)],
+                                  "id_a long, id_b long")
+    return lambda **kw: dedup.dedup_clusters(pairs, **kw)
+
+
+@pytest.mark.parametrize("algo", ["connected_components", "dedup_clusters"])
+def test_min_label_warns_when_max_iter_ends_it(spark, algo):
+    """The default max_iter=20 stops before the path's 30 supersteps and
+    leaves it split into 10 components: that must warn.  max_iter=40
+    reaches the fixpoint: one component, no warning."""
+    import warnings
+    run = _path_components(spark, algo)
+    with pytest.warns(RuntimeWarning, match="did not converge"):
+        run()
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        full = run(max_iter=40)
+    assert full.select(full.columns[1]).distinct().count() == 1
+
+
+def test_min_label_superstep_job_count(spark):
+    """The min-label convergence test reads the checkpointed superstep
+    frame instead of joining the new labels against the old ones.  On
+    the 30-node path with max_iter=40 (30 supersteps) the new-vs-old
+    join version ran 303 Spark jobs, about 10 per superstep, on a
+    4-core machine under local[4]; ask for at least one job per superstep
+    fewer."""
+    sc = spark.sparkContext
+    run = _path_components(spark, "connected_components")
+    group = "test_min_label_superstep_job_count"
+    sc.setJobGroup(group, "connected_components on a 30-node path")
+    try:
+        run(max_iter=40)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 303 - 30
+
+
 def test_pagerank_sink_gets_rank(spark):
     nodes = spark.createDataFrame([("a",), ("b",), ("c",)], "uid string")
     edges = spark.createDataFrame(
@@ -468,6 +530,29 @@ def test_label_propagation_planted_communities(spark):
     again = {r["uid"]: r["label"]
              for r in label_propagation(nodes, edges, iters=5).collect()}
     assert again == out
+
+
+@pytest.mark.parametrize("sources", [[("z",)], []],
+                         ids=["isolated-source", "no-source"])
+def test_betweenness_sampled_without_reach(spark, sources):
+    """No source reaches another node: the result is the empty
+    (uid, betweenness) frame."""
+    edges = spark.createDataFrame([("a", "b")],
+                                  "startuid string, enduid string")
+    src = spark.createDataFrame(sources, "uid string")
+    out = graph_algos.betweenness_sampled(edges, src)
+    assert out.columns == ["uid", "betweenness"] and out.count() == 0
+
+
+@pytest.mark.parametrize("algo, cols", [
+    ("maximal_independent_set", ["uid"]), ("maximal_matching", ["u", "v"])])
+def test_luby_without_non_loop_edges(spark, algo, cols):
+    """A graph whose only edge is a self-loop has nothing to select:
+    the empty frame with the documented columns."""
+    loop = spark.createDataFrame([("a", "a")],
+                                 "startuid string, enduid string")
+    out = getattr(graph_algos, algo)(loop)
+    assert out.columns == cols and out.count() == 0
 
 
 def test_k_core_peels_tail(spark):
@@ -678,6 +763,14 @@ def test_resolve_duplicates_keeps_best_scoring_member(spark):
             out[1]["n_members"]) == (2, 4, 3)
     assert (out[4]["keep_id"], out[4]["n_members"]) == (4, 1)
     assert 9 not in {r["keep_id"] for r in out.values()}
+    # a fractional score ranks in its own type (0.3 vs 0.9 must not
+    # truncate to a 0 tie that falls to the lower id)
+    frac = spark.createDataFrame([(1, 0.3), (2, 0.9)],
+                                 "doc_id long, q double")
+    pair = spark.createDataFrame([(1, 1), (2, 1)],
+                                 "doc_id long, cluster long")
+    (r,) = dedup.resolve_duplicates(frac, pair, "q").collect()
+    assert (r["keep_id"], r["best_score"]) == (2, 0.9)
 
 
 def test_mask_contaminated_spans_token_exact(spark):
